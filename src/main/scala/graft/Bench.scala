@@ -1,6 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
 import scala.jdk.CollectionConverters._
+import graft.core.GraftSession
 
 /** Headline benchmark: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of steady-state timings.
@@ -10,6 +15,15 @@ import scala.jdk.CollectionConverters._
   * class loading — the timings then reflect plan quality, which is what
   * the baseline comparison is about. Per-query progress goes to stderr in
   * execution order; stdout carries only the JSON line.
+  *
+  * Each timed run splits its wall into build (the query builder, with any
+  * driver-side actions it runs), plan (Catalyst analysis, optimization and
+  * physical planning of the count action, read from that action's own
+  * QueryPlanningTracker) and exec (the rest). A listener counts the jobs,
+  * stages, tasks, shuffle bytes and spill of every job the run tagged with
+  * `setJobGroup(key, run)`; jobs of streaming queries carry their stream's
+  * group and are not counted. `GRAFT_PLANS=<dir>` writes the formatted
+  * explain of each key's returned plan to `<dir>/<key>.txt`, untimed.
   *
   * Self-adjudication (the r12 artifact lesson — 1619 s battery vs 426 s
   * same-HEAD clean runs, with the amplification INTERNAL to the JVM so a
@@ -55,28 +69,21 @@ object Bench {
       case c => c.toString
     } + "\""
 
-  private case class QRes(name: String, wall: Double, cpu: Double,
+  private case class QRes(name: String, run: String, wall: Double,
+                          build: Double, plan: Double, cpu: Double,
                           gc: Double, rows: Long)
+
+  /** Spark work one timed run caused, filled in by the listener. */
+  private final class Counters {
+    var jobs, stages, tasks, shuffleRead, shuffleWrite, spill = 0L
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing floor: back on Spark's default (1m) since r15 — the
-      // r14 64k default was measured a net LOSS at the 32-core contract
-      // (dedup family battery 73.8 s @64k vs 60.6 s @1m, per-query cpu
-      // ~25% lower at 1m: keeping ~cores sub-MB post-shuffle partitions
-      // alive burns task overhead without adding useful parallelism).
-      // Still parameterised for cluster-profile experiments:
-      // GRAFT_AQE_MIN_PART overrides.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_AQE_MIN_PART", "1m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession.local(cpus)
+    val plansDir = sys.env.get("GRAFT_PLANS")
+      .map(d => Files.createDirectories(Paths.get(d)))
 
     // Warm against the small SF when present, else the bench dir itself —
     // a missing warmup dir must not silently charge JIT/codegen/footer
@@ -179,29 +186,73 @@ object Bench {
         .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
     val loadSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
 
-    def timeOne(name: String, sampleLoad: Boolean): QRes = {
+    // Listener events arrive asynchronously, so they are filed by the
+    // (job group, description) tag each run sets, never by arrival time.
+    val counters = new ConcurrentHashMap[(String, String), Counters]()
+    val stageTag = new ConcurrentHashMap[Int, (String, String)]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties)
+          .filter(_.getProperty("spark.jobGroup.id") != null)
+          .foreach { p =>
+            val tag = (p.getProperty("spark.jobGroup.id"),
+              p.getProperty("spark.job.description"))
+            counters.computeIfAbsent(tag, _ => new Counters).jobs += 1
+            j.stageIds.foreach(stageTag.put(_, tag))
+          }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        Option(stageTag.get(s.stageInfo.stageId)).foreach { tag =>
+          val c = counters.get(tag)
+          val m = s.stageInfo.taskMetrics
+          c.stages += 1
+          c.tasks += s.stageInfo.numTasks
+          c.shuffleRead += m.shuffleReadMetrics.totalBytesRead
+          c.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+          c.spill += m.diskBytesSpilled
+        }
+    })
+
+    def timeOne(name: String, run: String, sampleLoad: Boolean): QRes = {
       sweep()
       if (sampleLoad) {
         val la = osBean.getSystemLoadAverage
         if (la >= 0) loadSamples += la
       }
+      spark.sparkContext.setJobGroup(name, run)
       val g0 = gcMillis
       val c0 = cpuNanos
       val t0 = System.nanoTime()
-      val n = try picked(name)(spark, sfDir).count()
-              catch { case e: Throwable =>
+      var tBuilt = t0
+      var built: Option[DataFrame] = None
+      // the aggregate df.count() runs, held so that its QueryExecution's
+      // planning tracker can be read afterwards
+      var counted: Option[DataFrame] = None
+      val n = try {
+                built = Some(picked(name)(spark, sfDir))
+                tBuilt = System.nanoTime()
+                counted = Some(built.get.groupBy().count())
+                counted.get.collect().head.getLong(0)
+              } catch { case e: Throwable =>
                 System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1L }
       val wall = (System.nanoTime() - t0) / 1e9
       val cpu = if (c0 >= 0) (cpuNanos - c0) / 1e9 else -1.0
       val gc = (gcMillis - g0) / 1e3
-      QRes(name, wall, cpu, gc, n)
+      spark.sparkContext.clearJobGroup()
+      val plan = counted.fold(0.0)(
+        _.queryExecution.tracker.phases.values.map(_.durationMs).sum / 1e3)
+      for (d <- plansDir; df <- built)
+        try Files.writeString(d.resolve(s"$name.txt"),
+          df.queryExecution.explainString(FormattedMode))
+        catch { case e: Exception =>
+          System.err.println(s"[bench] plan dump $name failed: ${e.getMessage}") }
+      QRes(name, run, wall, (tBuilt - t0) / 1e9, plan, cpu, gc, n)
     }
 
     def runPass(passIdx: Int): Seq[QRes] =
       picked.keys.toSeq.sorted.map { name =>
-        val r = timeOne(name, sampleLoad = true)
+        val r = timeOne(name, s"p$passIdx", sampleLoad = true)
         System.err.println(
-          f"[bench p$passIdx] ${r.name}%-24s ${r.wall}%8.3f s  (cpu ${r.cpu}%8.3f s, gc ${r.gc}%6.2f s, ${r.rows} rows)")
+          f"[bench p$passIdx] ${r.name}%-24s ${r.wall}%8.3f s  (build ${r.build}%7.3f s, plan ${r.plan}%6.3f s, cpu ${r.cpu}%8.3f s, gc ${r.gc}%6.2f s, ${r.rows} rows)")
         r
       }
 
@@ -243,7 +294,7 @@ object Bench {
     val soloCpu = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def soloRun(names: Seq[String]): Unit = names.foreach { name =>
       if (!soloWall.contains(name)) {
-        val r = timeOne(name, sampleLoad = false)
+        val r = timeOne(name, "solo", sampleLoad = false)
         // a failed solo run must NOT masquerade as a (typically fast)
         // valid timing and adjudicate a regression as battery drift —
         // omit the pair entirely on failure
@@ -279,6 +330,9 @@ object Bench {
     val batteryState =
       if (suspects.isEmpty) "clean"
       else s"suspect: ${suspects.mkString(",")}"
+    // stop() drains the listener bus: every tagged job's counters have
+    // landed before they are read below
+    spark.stop()
 
     val solo = soloWall.map { case (k, v) => jstr(k) + ":" + r3(v) }
       .mkString("{", ",", "}")
@@ -319,9 +373,14 @@ object Bench {
       .mkString("{", ",", "}")
     val gcJson = best.map(r => jstr(r.name) + ":" + r3(r.gc))
       .mkString("{", ",", "}")
+    def mb(bytes: Long): Double = r3(bytes / 1e6)
+    val phasesJson = best.map { r =>
+      val c = counters.getOrDefault((r.name, r.run), new Counters)
+      jstr(r.name) + s""":{"build_s":${r3(r.build)},"plan_s":${r3(r.plan)},"exec_s":${r3(r.wall - r.build - r.plan)},"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},"shuffle_read_mb":${mb(c.shuffleRead)},"shuffle_write_mb":${mb(c.shuffleWrite)},"spill_mb":${mb(c.spill)}}"""
+    }.mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"cpu_total":$cpuTotal,"gc_total":$gcTotal,"loadavg_mean":$loadMean,"load_verdict":${jstr(loadVerdict)},"battery_state":${jstr(batteryState)},"pass_totals":$passTotals,"slowest":$slowest,"solo":$solo,"detail":"bench.json","sf":${jstr(sfDir)}}""")
     val fullBody =
-      s""""metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu":$cpuJson,"gc":$gcJson,"cpu_total":$cpuTotal,"gc_total":$gcTotal,"loadavg_mean":$loadMean,"loadavg_max":$loadMax,"load_verdict":${jstr(loadVerdict)},"battery_state":${jstr(batteryState)},"pass_totals":$passTotals,"solo":$solo,"solo_cpu":$soloCpuJson,"sf":${jstr(sfDir)}}"""
+      s""""metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu":$cpuJson,"gc":$gcJson,"phases":$phasesJson,"cpu_total":$cpuTotal,"gc_total":$gcTotal,"loadavg_mean":$loadMean,"loadavg_max":$loadMax,"load_verdict":${jstr(loadVerdict)},"battery_state":${jstr(batteryState)},"pass_totals":$passTotals,"solo":$solo,"solo_cpu":$soloCpuJson,"sf":${jstr(sfDir)}}"""
     val full = "{" + fullBody
     try {
       // a filtered run must not clobber the full-battery artifact; the
@@ -352,6 +411,5 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write bench.json: ${e.getMessage}")
     }
-    spark.stop()
   }
 }

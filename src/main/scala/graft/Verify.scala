@@ -1,29 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.Bench.jstr
+import graft.core.GraftSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing floor: back on Spark's default (1m) since r15 — the
-      // r14 64k default was measured a net LOSS at the 32-core contract
-      // (dedup family battery 73.8 s @64k vs 60.6 s @1m, per-query cpu
-      // ~25% lower at 1m: keeping ~cores sub-MB post-shuffle partitions
-      // alive burns task overhead without adding useful parallelism).
-      // Still parameterised for cluster-profile experiments:
-      // GRAFT_AQE_MIN_PART overrides.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_AQE_MIN_PART", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     // GRAFT_ONLY=q1,q2 — local-iteration filter; the driver never sets it,
     // so its gate always dumps the full battery.
@@ -72,20 +57,8 @@ object Verify {
         s""""sf":"$sfDir","loadavg_mean":${
           r3(if (loadN > 0) loadSum / loadN else -1)},""" +
         s""""queries":$timesJson}""")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelationWithTable}
 import org.apache.spark.sql.functions._
 
 /** Readers for the driver-generated testdata lake (TESTDATA.md).
@@ -119,42 +120,43 @@ object Tables {
     * sizes vs `spark.sql.files.maxPartitionBytes`), never `df.rdd` — the
     * r14 probe materialized an RDD lineage per query build (a fixed
     * driver tax on every sub-second query) and threw on streaming plans.
-    * File sizes are cached per path for the session lifetime (the lake is
-    * immutable during a run), so repeated corpus builds cost zero FS
-    * calls. Streaming inputs pass through untouched: micro-batch
-    * parallelism is the source's concern, and a static floor computed at
-    * plan-build time would be meaningless there. Apply it ONLY on paths
+    * The sizes are the ones each scan's file index listed when the scan
+    * was created, so the decision makes no FS calls. Streaming inputs pass
+    * through untouched: micro-batch parallelism is the source's concern,
+    * and a static floor computed at plan-build time would be meaningless
+    * there. So do plans with no file-backed leaf (ranges, local or cached
+    * relations): there is no file layout to correct. Apply it ONLY on paths
     * whose downstream work is CPU-dense; for a cheap map or a tiny
     * aggregation the exchange is pure cost (the r14 lesson: a blanket
     * floor taxed ~180 sub-second queries and broke the map-only plan
     * pins). */
-  private val fileLenCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Estimated scan-split count of `df`'s leaf files, mirroring Spark's
-    * packing rule (each file charged its size plus one open cost, bins of
-    * maxPartitionBytes). Over-estimating is safe here: the floor then
-    * skips a repartition that large inputs do not need anyway. */
-  private def estScanSplits(df: DataFrame): Long = {
-    val conf = df.sparkSession.sessionState.conf
-    val maxSplit = math.max(1L, conf.filesMaxPartitionBytes)
-    val openCost = conf.filesOpenCostInBytes
-    val hconf = df.sparkSession.sessionState.newHadoopConf()
-    val cost = df.inputFiles.map { p =>
-      fileLenCache.computeIfAbsent(p, { _ =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        try path.getFileSystem(hconf).getFileStatus(path).getLen
-        catch { case _: java.io.IOException => 0L }
-      }).longValue() + openCost
-    }.sum
-    math.max(1L, (cost + maxSplit - 1) / maxSplit)
+  /** Estimated scan-split count of `df`'s file-backed leaves, mirroring
+    * Spark's packing rule (each file charged its size plus one open cost,
+    * bins of maxPartitionBytes); None when no leaf reads files. A file read
+    * by several leaves counts once, as in `Dataset.inputFiles`.
+    * Over-estimating is safe here: the floor then skips a repartition that
+    * large inputs do not need anyway. */
+  private def estScanSplits(df: DataFrame): Option[Long] = {
+    val lens = df.queryExecution.optimizedPlan.collect {
+      case LogicalRelationWithTable(r: HadoopFsRelation, _) =>
+        r.location.listFiles(Nil, Nil).flatMap(_.files)
+          .map(f => f.getPath -> f.getLen)
+    }.flatten.toMap
+    if (lens.isEmpty) None
+    else {
+      val conf = df.sparkSession.sessionState.conf
+      val maxSplit = math.max(1L, conf.filesMaxPartitionBytes)
+      val cost = lens.values.map(_ + conf.filesOpenCostInBytes).sum
+      Some(math.max(1L, (cost + maxSplit - 1) / maxSplit))
+    }
   }
 
   def fanOut(df: DataFrame): DataFrame = {
     if (df.isStreaming) df
     else {
       val target = df.sparkSession.sparkContext.defaultParallelism
-      if (estScanSplits(df) >= target) df else df.repartition(target)
+      if (estScanSplits(df).exists(_ < target)) df.repartition(target)
+      else df
     }
   }
 }

@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.ml.classification.RandomForestClassificationModel
 import org.apache.spark.sql.SparkSession
 
+import graft.core.GraftSession
+
 /** Export an MLlib [[RandomForestClassificationModel]] to the
   * `graft-sk-forest` JSON format (the A29 interop format), closing the
   * reference's save→score seam for MLlib-fitted forests: the reference's
@@ -116,12 +118,7 @@ object MllibExport {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outPath = args.lift(1)
       .getOrElse("src/main/resources/graft/mllib_rf.json")
-    val spark = SparkSession.builder()
-      .appName("graft-mllib-export").master("local[8]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     try {
       val json = fitAndExport(spark, sfDir)
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

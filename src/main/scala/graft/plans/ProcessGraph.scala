@@ -41,10 +41,19 @@ final class ProcessGraph(spark: SparkSession, dataDir: String) {
     // MLModel objects between ml_* nodes the same way (test_rf_class_
     // workflow); cubeArg/modelArg unwrap with a typed error
     val memo = scala.collection.mutable.Map.empty[String, Any]
+    // the chain of nodes under evaluation: meeting one of them again
+    // means the graph has a cycle, which would otherwise recurse forever
+    val active = scala.collection.mutable.LinkedHashSet.empty[String]
     def evalNode(id: String): Any = memo.getOrElseUpdate(id, {
+      if (!active.add(id)) throw new IllegalArgumentException(
+        "process graph has a cycle: " +
+          (active.toSeq.dropWhile(_ != id) :+ id).mkString(" -> "))
       val node = nodes.getOrElse(id,
         throw new IllegalArgumentException(s"unknown node '$id'"))
-      exec(node.get("process_id").asText(), node.get("arguments"), evalNode)
+      val value =
+        exec(node.get("process_id").asText(), node.get("arguments"), evalNode)
+      active -= id
+      value
     })
     evalNode(resultId) match {
       case c: DataCube => c.df

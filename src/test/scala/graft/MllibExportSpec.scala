@@ -10,7 +10,8 @@ import graft.ml.{MllibExport, ProbeModels, RidgeProbe, SkForest}
   *    recipe produces (byte parity — fit drift, export drift, or
   *    committed-file drift all fail here; this also re-proves the fit's
   *    partition invariance, since the suite session runs local[4]/4
-  *    shuffle partitions vs the exporter main's local[8]/32);
+  *    shuffle partitions and the committed file was exported at
+  *    local[8]/32);
   *  - SkForest scoring of the export must agree with MLlib
   *    `model.transform` on every corpus row (prediction parity, after
   *    undoing the +1 label shift through the classes vector);

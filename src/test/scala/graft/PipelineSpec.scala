@@ -102,6 +102,18 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("process graph: a cycle fails naming its nodes, not by overflow") {
+    val e = intercept[IllegalArgumentException] {
+      new ProcessGraph(spark, sfDir).run(
+        """{"a": {"process_id": "apply",
+          |       "arguments": {"data": {"from_node": "b"}, "process": "abs"}},
+          | "b": {"process_id": "apply",
+          |       "arguments": {"data": {"from_node": "a"}, "process": "abs"},
+          |       "result": true}}""".stripMargin)
+    }
+    assert(e.getMessage.contains("b -> a -> b"), e.getMessage)
+  }
+
   test("process graph: apply_dimension and curve fit/predict compose") {
     import org.apache.spark.sql.functions._
     val pg = new ProcessGraph(spark, sfDir)

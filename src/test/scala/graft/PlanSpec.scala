@@ -449,4 +449,18 @@ class PlanSpec extends SparkSpec {
       s"tokenization must not shuffle the corpus:\n$p")
     assert(p.contains("*("), "tokenization must be whole-stage codegen")
   }
+
+  test("fanOut: a plan with no file-backed leaf passes through unchanged") {
+    val df = spark.range(0, 1000, 1, 1).toDF()
+    assert(Tables.fanOut(df) eq df)
+  }
+
+  test("fanOut: a one-file parquet scan is spread over every core") {
+    Tables.fanOut(Tables.documents(spark, sfDir)).queryExecution.logical match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition =>
+        assert(r.shuffle &&
+          r.numPartitions == spark.sparkContext.defaultParallelism)
+      case other => fail(s"expected a round-robin repartition, got:\n$other")
+    }
+  }
 }
